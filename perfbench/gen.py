@@ -18,6 +18,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from etl_schema_spark.operators.dedup import NEW_BATCH_MOD  # front door indexes doc_id % 10 != 9
+
 VOCAB = (
     "spark window merge table column vector stream value data small join filter "
     "big group hash customer sort order slow line part fast row the agg key "
@@ -190,7 +192,6 @@ def events(rng, first_id: int, n: int, n_users: int, day0: float, days: float,
 ARRIVING_ID0 = 10_000_000  # arriving doc ids never collide with the corpus
 EXACT_SHARE, NEAR_SHARE = 0.2, 0.2  # the rest are fresh docs
 LATE_SHARE = 0.1
-NEW_BATCH_MOD = 10  # the corpus slice the front door indexes: doc_id % 10 != 9
 
 
 def doc_batch(seed: int, pass_no: int, index: int, rows: int, corpus: pa.Table,

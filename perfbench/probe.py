@@ -168,9 +168,8 @@ class _QueryListener:
 
 
 class Accounting:
-    def __init__(self, spark, listen: bool) -> None:
-        from pyspark.java_gateway import ensure_callback_server_started
-
+    def __init__(self, spark) -> None:
+        self.spark = spark
         self.jsc = spark.sparkContext._jsc.sc()
         self.store = self.jsc.statusStore()
         jvm = spark._jvm
@@ -178,10 +177,27 @@ class Accounting:
         self._compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
         self.queries = _QueryListener()
         self.progress: list[dict] = []
-        if listen:
-            ensure_callback_server_started(spark.sparkContext._gateway)
-            spark._jsparkSession.listenerManager().register(self.queries)
-            spark.streams.addListener(_progress_listener(self.progress))
+        self._progress = None  # the registered StreamingQueryListener, if any
+
+    def listen(self, on: bool) -> None:
+        """Register (or remove) the query and streaming listeners. Only
+        traced passes listen: the listeners call back into Python for every
+        query and micro-batch, a cost untraced passes must not pay."""
+        if on == (self._progress is not None):
+            return
+        listeners = self.spark._jsparkSession.listenerManager()
+        if on:
+            from pyspark.java_gateway import ensure_callback_server_started
+
+            ensure_callback_server_started(self.spark.sparkContext._gateway)
+            listeners.register(self.queries)
+            self._progress = _progress_listener(self.progress)
+            self.spark.streams.addListener(self._progress)
+        else:
+            self.drain_events()
+            listeners.unregister(self.queries)
+            self.spark.streams.removeListener(self._progress)
+            self._progress = None
 
     def jobs(self) -> int:
         return self.jsc.dagScheduler().numTotalJobs()

@@ -9,7 +9,7 @@ perfbench/README.md). ``--trace 0`` prints the end-to-end metrics;
 ``--trace 1`` prints the per-layer metrics of a traced run and writes its
 spans to ``.perfbench_out/``. The last stdout line is one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``; the line before it
-carries diagnostics (environment, host canaries, set-up samples, error
+carries diagnostics (environment, host canaries, set-up parts, error
 rate, failures). The exit code is 0 only when every output is correct.
 """
 
@@ -31,7 +31,10 @@ SF = 0.002  # generated input scale (lineitem rows = 6M x SF)
 # The tables are the same in every run, like a read-only testdata set; the
 # run's --seed permutes the operation order and makes the arriving batches.
 DATA_SEED = 42
-SETUPS = 3  # session set-ups per run; setup_s is their median
+# The JIT and Spark's caches keep warming after the cold pass: the pass
+# after it runs about a quarter slower than the ones that follow, so it is
+# run (and checked) but not timed.
+WARM_PASSES = 1
 MIN_STEADY = 3  # steady passes per untraced run, at least
 DRIVER_MEMORY = "1g"
 END_TO_END = {"setup_s": "s", "first_pass_s": "s", "pass_s": "s", "peak_rss_mb": "MB"}
@@ -69,10 +72,11 @@ def spark_conf(work: str) -> dict:
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # The heap is committed and touched at start, so peak RSS reads the
-        # fixed heap plus what the program adds off-heap (generated classes,
-        # code cache, Arrow and shuffle buffers), not the collector's timing.
-        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
+        # The heap is sized at its maximum from the start, so the collector
+        # makes no expansion decisions, which follow GC timing and moved
+        # peak RSS by up to 25% between runs. It is not pre-touched: RSS
+        # counts the heap pages the program's allocations have touched.
+        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY}",
     }
 
 
@@ -122,25 +126,10 @@ def warm_up(spark) -> None:
     spark.range(10_000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
 
 
-def canary(spark, warm: bool) -> dict:
-    """bench.py's two host canaries, single-shot: a 20M-step Python loop and
-    a 10M-row Spark aggregate. Diagnostic only, never a gate."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(20_000_000):
-        s += i
-    assert s == 199999990000000
-    cpu = time.perf_counter() - t0
-
-    def agg() -> float:
-        df = spark.range(10_000_000)
-        t = time.perf_counter()
-        df.selectExpr("id % 1024 AS k", "id AS v").groupBy("k").sum("v").count()
-        return time.perf_counter() - t
-
-    if warm:
-        agg()
-    return {"cpu_s": round(cpu, 4), "agg_s": round(agg(), 4)}
+def canary(host_canary) -> dict:
+    """The two host canaries of ``tools/host_canary.py``, once each (the
+    aggregate runs in the active session). Diagnostic only, never a gate."""
+    return {"cpu_s": round(host_canary.cpu_loop(), 4), "agg_s": round(host_canary.spark_agg(), 4)}
 
 
 def steady_pass_s(passes: list[dict]) -> float:
@@ -209,30 +198,26 @@ def make_workload(name: str):
     }[name]()
 
 
-def start_sessions(work: str, gen_s: float):
-    """Set the session up ``SETUPS`` times: the first from process start
-    (input generation excluded), then after ``spark.stop()``. Returns the
-    last session and (start_s, warmup_s) per set-up."""
+def start_session(work: str, gen_s: float):
+    """The cold set-up: from process start (input generation excluded) until
+    ``get_spark`` has returned, then the warm-up. Returns the session and
+    (start_s, warmup_s)."""
     from etl_schema_spark.session import get_spark
 
-    setups, spark = [], None
-    for i in range(SETUPS):
-        if spark is not None:
-            spark.stop()
-        t0 = time.perf_counter()
-        spark = get_spark("perfbench", extra_conf=spark_conf(work))
-        start = process_age() - gen_s if i == 0 else time.perf_counter() - t0
-        t1 = time.perf_counter()
-        warm_up(spark)
-        setups.append((start, time.perf_counter() - t1))
+    spark = get_spark("perfbench", extra_conf=spark_conf(work))
+    start = process_age() - gen_s
+    t0 = time.perf_counter()
+    warm_up(spark)
+    warmup = time.perf_counter() - t0
     spark.sparkContext.setLogLevel("ERROR")
-    return spark, setups
+    return spark, (start, warmup)
 
 
-def run_passes(args, ctx, wl, tracer) -> tuple[list[dict], list[str]]:
-    """The cold first pass, then steady passes until ``args.seconds`` have
-    passed and there are enough of them. A traced run alternates traced
-    and untraced steady passes, so both are measured in one session."""
+def run_passes(args, ctx, wl, tracer, rss) -> tuple[list[dict], list[str]]:
+    """The cold first pass, the warm-up passes, then steady passes until
+    ``args.seconds`` have passed and there are enough of them. A traced run
+    alternates traced and untraced steady passes, so both are measured in
+    one session. Each pass records ``rss()`` after it."""
     from etl_schema_spark.operators import cachereg
     from workloads import LakeIngest, run_op
 
@@ -240,6 +225,7 @@ def run_passes(args, ctx, wl, tracer) -> tuple[list[dict], list[str]]:
     passes, failures = [], []
 
     def run_pass(pass_no: int, traced: bool) -> None:
+        ctx.acct.listen(traced)
         ctx.tracer = tracer if traced else None
         first_span = len(tracer.spans)
         ctx.layers = {}
@@ -255,6 +241,8 @@ def run_passes(args, ctx, wl, tracer) -> tuple[list[dict], list[str]]:
                 failures.append(f"pass {pass_no} {name}: {type(ex).__name__}: {ex}"[:500])
                 ops.append((name, time.perf_counter() - t_op))
         rec = {"pass_s": time.perf_counter() - t, "ops": ops, "traced": traced}
+        wl.end_pass()
+        rec["rss"] = rss()
         if is_lake:
             after = wl.written()
             rec["rows"] = wl.arrived_rows - arrived[0]
@@ -271,32 +259,37 @@ def run_passes(args, ctx, wl, tracer) -> tuple[list[dict], list[str]]:
         passes.append(rec)
 
     run_pass(0, traced=bool(args.trace))
+    for _ in range(WARM_PASSES):
+        run_pass(len(passes), traced=False)
     t_steady = time.perf_counter()
     while True:
-        run_pass(len(passes), traced=bool(args.trace) and len(passes) % 2 == 1)
-        steady = passes[1:]
+        n_steady = len(passes) - 1 - WARM_PASSES
+        run_pass(len(passes), traced=bool(args.trace) and n_steady % 2 == 0)
+        steady = passes[1 + WARM_PASSES:]
         n_traced = sum(p["traced"] for p in steady)
-        enough = (n_traced >= 2 and len(steady) - n_traced >= 1) if args.trace \
+        enough = (n_traced >= 2 and len(steady) - n_traced >= 2) if args.trace \
             else len(steady) >= MIN_STEADY
         if enough and time.perf_counter() - t_steady >= args.seconds:
+            ctx.acct.listen(False)
             return passes, failures
 
 
-def per_layer(passes: list[dict], setups) -> dict:
+def per_layer(passes: list[dict], setup: tuple[float, float]) -> dict:
     """Counts from the first traced steady pass; times are medians over the
-    traced steady passes."""
+    traced steady passes. The tracing overhead is the traced steady pass
+    against the untraced steady passes of the same run, which run without
+    listeners."""
     from workloads import LAYER_METRICS
 
-    traced = [p for p in passes[1:] if p["traced"]]
-    untraced = [p for p in passes[1:] if not p["traced"]]
+    traced = [p for p in passes[1 + WARM_PASSES:] if p["traced"]]
+    untraced = [p for p in passes[1 + WARM_PASSES:] if not p["traced"]]
     values = {}
     for m in LAYER_METRICS:
         if m.endswith(("_s", "_ms")):
             values[m] = statistics.median(p["layers"].get(m, 0) for p in traced)
         else:
             values[m] = traced[0]["layers"].get(m, 0)
-    values["session.start_s"] = statistics.median(a for a, _ in setups)
-    values["session.warmup_s"] = statistics.median(b for _, b in setups)
+    values["session.start_s"], values["session.warmup_s"] = setup
     for name in SELF_TIMES:
         values[f"self.{name}_s"] = statistics.median(
             sum(t for k, t in p["self"].items() if k == name or k.startswith(name + "."))
@@ -316,16 +309,18 @@ def run(args, work: str, env: dict) -> tuple[dict, dict]:
     t0 = time.perf_counter()
     gen.write_star(data, DATA_SEED, SF)
     gen_s = time.perf_counter() - t0
-    spark, setups = start_sessions(work, gen_s)
+    spark, setup = start_session(work, gen_s)
     jvm_pid = spark.sparkContext._gateway.proc.pid
-    acct = Accounting(spark, listen=bool(args.trace))
-    canary_start = canary(spark, warm=True)
+    acct = Accounting(spark)
+    host_canary = verify.tool(ROOT, "host_canary")
+    canary_start = canary(host_canary)
 
     wl = make_workload(args.workload)
     ctx = Ctx(spark, data, work, args.seed, acct)
     wl.setup(ctx)
     is_lake = isinstance(wl, LakeIngest)
-    passes, failures = run_passes(args, ctx, wl, Tracer(lambda: acct.codegen()[1]))
+    passes, failures = run_passes(args, ctx, wl, Tracer(lambda: acct.codegen()[1]),
+                                  lambda: {"jvm": vm_hwm_mb(jvm_pid), "driver": vm_hwm_mb("self")})
 
     # correctness, off the clock
     t0 = time.perf_counter()
@@ -336,15 +331,14 @@ def run(args, work: str, env: dict) -> tuple[dict, dict]:
     else:
         import __spark_entry__ as entry
 
-        failures += verify.check_registry(ROOT, data, wl.outputs, entry.oracle_sql())
+        failures += verify.check_registry(ROOT, data, wl.results(), entry.oracle_sql())
     verify_s = time.perf_counter() - t0
-    canary_end = canary(spark, warm=False)
-    peak_rss = vm_hwm_mb(jvm_pid) + vm_hwm_mb("self")
+    canary_end = canary(host_canary)
     t0 = time.perf_counter()
     shutdown(spark)
     stop_s = time.perf_counter() - t0
 
-    steady = [p for p in passes[1:] if not p["traced"]]
+    steady = [p for p in passes[1 + WARM_PASSES:] if not p["traced"]]
     op_s = [s for p in steady for _, s in p["ops"]]
     tail_s, tail_pct, tail_beyond = tail(op_s)
     result = outcome(attempted, failures)
@@ -353,8 +347,8 @@ def run(args, work: str, env: dict) -> tuple[dict, dict]:
         **source_identity(), "env": env, "spark_ui": "off",
         "canary_start": canary_start, "canary_end": canary_end,
         "gen_inputs_s": round(gen_s, 4), "verify_s": round(verify_s, 4),
-        "shutdown_s": round(stop_s, 4),
-        "setup_samples": [{"start_s": round(a, 4), "warmup_s": round(b, 4)} for a, b in setups],
+        "shutdown_s": round(stop_s, 4), "peak_rss_mb": passes[-1]["rss"],
+        "setup": {"start_s": round(setup[0], 4), "warmup_s": round(setup[1], 4)},
         "pass_s": [round(p["pass_s"], 4) for p in passes],
         "op_median_s": {n: round(statistics.median(s for p in steady for k, s in p["ops"] if k == n), 4)
                         for n in dict.fromkeys(k for k, _ in passes[0]["ops"])},
@@ -367,14 +361,16 @@ def run(args, work: str, env: dict) -> tuple[dict, dict]:
         diag["ingest_rows_per_s"] = statistics.median(p["rows"] / p["pass_s"] for p in steady)
         diag["write_amp"] = statistics.median(p["write_amp"] for p in steady)
     if args.trace:
-        result["metrics"] = per_layer(passes, setups)
+        result["metrics"] = per_layer(passes, setup)
         dump_spans(args, passes)
     else:
         values = {
-            "setup_s": statistics.median(a + b for a, b in setups),
+            "setup_s": sum(setup),
             "first_pass_s": passes[0]["pass_s"],
             "pass_s": steady_pass_s(steady),
-            "peak_rss_mb": peak_rss,
+            # the same work in every run, whatever the host's speed; read
+            # before any check runs in either process
+            "peak_rss_mb": sum(passes[WARM_PASSES + MIN_STEADY]["rss"].values()),
         }
         result["metrics"] = {k: {"value": values[k], "unit": END_TO_END[k]} for k in END_TO_END}
     return diag, result

@@ -4,7 +4,8 @@ Registry entries are compared with their DuckDB ``oracle_sql()`` twins using
 the canonicalisation of ``tools/check_correctness.py`` (column names, Arrow
 type classes, order-insensitive values). ``lake_ingest`` is checked against
 DuckDB recomputed over the staged batches. Every check returns a list of
-failure messages; an empty list means correct.
+failure messages; an empty list means correct. DuckDB is imported by the
+checks only, so that it is not loaded in the driver while passes run.
 """
 
 from __future__ import annotations
@@ -13,15 +14,15 @@ import importlib.util
 import os
 import sys
 
-import duckdb
 import pyarrow as pa
 
 import gen
 
-def _check_correctness(root: str):
-    """Import ``tools/check_correctness.py`` from the checkout by path."""
-    path = os.path.join(root, "tools", "check_correctness.py")
-    spec = importlib.util.spec_from_file_location("check_correctness", path)
+
+def tool(root: str, name: str):
+    """Import ``tools/<name>.py`` from the checkout by path."""
+    path = os.path.join(root, "tools", f"{name}.py")
+    spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
     saved = list(sys.path)
     try:
@@ -42,7 +43,9 @@ def rows(tbl: pa.Table) -> list[tuple]:
     return list(zip(*cols)) if cols else []
 
 
-def duck(cc, data_dir: str) -> duckdb.DuckDBPyConnection:
+def duck(cc, data_dir: str):
+    import duckdb
+
     con = duckdb.connect()
     for t in cc.TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{data_dir}/{t}.parquet')")
@@ -69,7 +72,7 @@ def compare(cc, name: str, got: pa.Table, want: pa.Table) -> list[str]:
 def check_registry(root: str, data_dir: str, outputs, oracles: dict[str, str]) -> list[str]:
     """One message per wrong output in ``outputs`` = (name, Spark Arrow
     table) pairs; each oracle runs once."""
-    cc = _check_correctness(root)
+    cc = tool(root, "check_correctness")
     con = duck(cc, data_dir)
     want: dict[str, pa.Table] = {}
     fails = []
@@ -87,6 +90,7 @@ def check_lake(spark, lake) -> list[str]:
     """The ``LAKE_CHECKS`` end-state checks of a finished
     ``workloads.LakeIngest``: lake rows per date, the hourly rollup, one
     verdict per arriving doc, planted exact copies verdicted duplicate."""
+    import duckdb
     from pyspark.sql import functions as F
 
     from etl_schema_spark import sinks

@@ -21,6 +21,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow.feather as feather
 import pyarrow.parquet as pq
 
 import gen
@@ -77,8 +78,9 @@ class Ctx:
 
 
 def run_op(ctx: Ctx, name: str, body) -> float:
-    """Run one operation; return its wall time. A traced run also attributes
-    the Spark work done meanwhile to the spans the body opened."""
+    """Run one operation; return its wall time. A traced operation also
+    attributes the Spark work done meanwhile to the spans the body opened;
+    its wall time includes that attribution, the cost of tracing it."""
     if ctx.tracer is None:
         t0 = time.perf_counter()
         body(ctx)
@@ -95,12 +97,11 @@ def run_op(ctx: Ctx, name: str, body) -> float:
         body(ctx)
     finally:
         tr.close(op)
-        wall = time.perf_counter() - t0
         acct.drain_events()
         _attribute(ctx, op, j0, q0, p0, cg0)
         ctx.add("cachereg.memo_reuse",
                 sum(1 for k, df in pins0.items() if cachereg._PINS.get(k) is df))
-    return wall
+    return time.perf_counter() - t0
 
 
 def _attribute(ctx: Ctx, op, j0: int, q0: int, p0: int, cg0) -> None:
@@ -187,16 +188,33 @@ def _attribute(ctx: Ctx, op, j0: int, q0: int, p0: int, cg0) -> None:
 
 class Registry:
     """Registry entries, each output collected as Arrow so that every timed
-    output is checked afterwards; the seed permutes each pass."""
+    output is checked afterwards; the seed permutes each pass. Outputs are
+    written to the work directory after each pass, so that the driver holds
+    one pass's outputs at a time."""
 
     def __init__(self, names: list[str]) -> None:
         self.names = names
-        self.outputs: list = []  # (name, Arrow table) per executed operation
+        self.pending: list = []  # (name, Arrow table) of the running pass
+        self.outputs: list = []  # (name, Arrow IPC file) per executed operation
 
     def setup(self, ctx: Ctx) -> None:
         import __spark_entry__ as entry
 
         self.fns = entry.queries()
+        self.out_dir = os.path.join(ctx.work_dir, "outputs")
+        os.makedirs(self.out_dir, exist_ok=True)
+
+    def end_pass(self) -> None:
+        for name, tbl in self.pending:
+            path = os.path.join(self.out_dir, f"{len(self.outputs):05d}.arrow")
+            feather.write_feather(tbl, path, compression="uncompressed")
+            self.outputs.append((name, path))
+        self.pending = []
+
+    def results(self):
+        """(name, Arrow table) per executed operation, read back."""
+        for name, path in self.outputs:
+            yield name, feather.read_table(path)
 
     def ops(self, ctx: Ctx, pass_no: int):
         order = np.random.default_rng([ctx.seed, pass_no]).permutation(len(self.names))
@@ -208,7 +226,7 @@ class Registry:
         with ctx.span("construct"):
             df = self.fns[name](ctx.spark, ctx.data_dir)
         with ctx.span("sink"):
-            self.outputs.append((name, df.toArrow()))
+            self.pending.append((name, df.toArrow()))
 
 
 def dir_stats(*paths: str) -> tuple[int, int]:
@@ -249,6 +267,9 @@ class LakeIngest:
 
     def written(self) -> tuple[int, int]:
         return dir_stats(self.lake, self.rollup, self.target)
+
+    def end_pass(self) -> None:
+        pass
 
     def ops(self, ctx: Ctx, pass_no: int):
         yield "docs", lambda c: self._docs(c, pass_no)
