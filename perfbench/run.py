@@ -31,10 +31,6 @@ SF = 0.002  # generated input scale (lineitem rows = 6M x SF)
 # The tables are the same in every run, like a read-only testdata set; the
 # run's --seed permutes the operation order and makes the arriving batches.
 DATA_SEED = 42
-# The JIT and Spark's caches keep warming after the cold pass: the pass
-# after it runs about a quarter slower than the ones that follow, so it is
-# run (and checked) but not timed.
-WARM_PASSES = 1
 MIN_STEADY = 3  # steady passes per untraced run, at least
 DRIVER_MEMORY = "1g"
 END_TO_END = {"setup_s": "s", "first_pass_s": "s", "pass_s": "s", "peak_rss_mb": "MB"}
@@ -224,7 +220,7 @@ def run_passes(args, ctx, wl, tracer, rss) -> tuple[list[dict], list[str]]:
     is_lake = isinstance(wl, LakeIngest)
     passes, failures = [], []
 
-    def run_pass(pass_no: int, traced: bool) -> None:
+    def run_pass(pass_no: int, traced: bool, steady: bool) -> None:
         ctx.acct.listen(traced)
         ctx.tracer = tracer if traced else None
         first_span = len(tracer.spans)
@@ -240,7 +236,7 @@ def run_passes(args, ctx, wl, tracer, rss) -> tuple[list[dict], list[str]]:
             except Exception as ex:  # counted in error_rate, run continues
                 failures.append(f"pass {pass_no} {name}: {type(ex).__name__}: {ex}"[:500])
                 ops.append((name, time.perf_counter() - t_op))
-        rec = {"pass_s": time.perf_counter() - t, "ops": ops, "traced": traced}
+        rec = {"pass_s": time.perf_counter() - t, "ops": ops, "traced": traced, "steady": steady}
         wl.end_pass()
         rec["rss"] = rss()
         if is_lake:
@@ -258,14 +254,15 @@ def run_passes(args, ctx, wl, tracer, rss) -> tuple[list[dict], list[str]]:
             rec["self"] = tracer.self_times(rec["spans"])
         passes.append(rec)
 
-    run_pass(0, traced=bool(args.trace))
-    for _ in range(WARM_PASSES):
-        run_pass(len(passes), traced=False)
+    run_pass(0, traced=bool(args.trace), steady=False)
+    for _ in range(wl.warm_passes):
+        run_pass(len(passes), traced=False, steady=False)
     t_steady = time.perf_counter()
+    n_steady = 0
     while True:
-        n_steady = len(passes) - 1 - WARM_PASSES
-        run_pass(len(passes), traced=bool(args.trace) and n_steady % 2 == 0)
-        steady = passes[1 + WARM_PASSES:]
+        run_pass(len(passes), traced=bool(args.trace) and n_steady % 2 == 0, steady=True)
+        n_steady += 1
+        steady = passes[-n_steady:]
         n_traced = sum(p["traced"] for p in steady)
         enough = (n_traced >= 2 and len(steady) - n_traced >= 2) if args.trace \
             else len(steady) >= MIN_STEADY
@@ -281,8 +278,8 @@ def per_layer(passes: list[dict], setup: tuple[float, float]) -> dict:
     listeners."""
     from workloads import LAYER_METRICS
 
-    traced = [p for p in passes[1 + WARM_PASSES:] if p["traced"]]
-    untraced = [p for p in passes[1 + WARM_PASSES:] if not p["traced"]]
+    traced = [p for p in passes if p["steady"] and p["traced"]]
+    untraced = [p for p in passes if p["steady"] and not p["traced"]]
     values = {}
     for m in LAYER_METRICS:
         if m.endswith(("_s", "_ms")):
@@ -338,7 +335,7 @@ def run(args, work: str, env: dict) -> tuple[dict, dict]:
     shutdown(spark)
     stop_s = time.perf_counter() - t0
 
-    steady = [p for p in passes[1 + WARM_PASSES:] if not p["traced"]]
+    steady = [p for p in passes if p["steady"] and not p["traced"]]
     op_s = [s for p in steady for _, s in p["ops"]]
     tail_s, tail_pct, tail_beyond = tail(op_s)
     result = outcome(attempted, failures)
@@ -370,7 +367,7 @@ def run(args, work: str, env: dict) -> tuple[dict, dict]:
             "pass_s": steady_pass_s(steady),
             # the same work in every run, whatever the host's speed; read
             # before any check runs in either process
-            "peak_rss_mb": sum(passes[WARM_PASSES + MIN_STEADY]["rss"].values()),
+            "peak_rss_mb": sum(steady[MIN_STEADY - 1]["rss"].values()),
         }
         result["metrics"] = {k: {"value": values[k], "unit": END_TO_END[k]} for k in END_TO_END}
     return diag, result

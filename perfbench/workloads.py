@@ -192,6 +192,12 @@ class Registry:
     written to the work directory after each pass, so that the driver holds
     one pass's outputs at a time."""
 
+    # Untimed passes after the cold one. The JIT keeps compiling for several
+    # passes, and pass times fall with it; on llm_curation, with two untimed
+    # passes, they still fell from the third to the fifth pass after the
+    # cold one in most runs, so three passes are run (and checked) untimed.
+    warm_passes = 3
+
     def __init__(self, names: list[str]) -> None:
         self.names = names
         self.pending: list = []  # (name, Arrow table) of the running pass
@@ -246,6 +252,11 @@ class LakeIngest:
     """Arriving documents through the streaming front door; arriving events
     through additive-evolution appends, a partition refresh and a read-back."""
 
+    # Untimed passes after the cold one. JIT compile time (summed over the
+    # compiler threads) is about 46 s by the end of the cold pass, then about
+    # 11 s, 9 s and 3-6 s per pass; pass times fall with it and level off
+    # about four passes after the cold one on a quiet host.
+    warm_passes = 2
     DOC_ROWS = 40  # one arriving file, one micro-batch, per pass
     EVENT_ROWS = 500  # per batch; one batch per pass, two in the first
     N_USERS = 30
